@@ -47,8 +47,60 @@ identical results (see tests/test_lww.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def lww_reduce(
+    log: DataFrame,
+    key_col: str = "doc_id",
+    lsn_col: str = "lsn",
+    salt_buckets: int = 0,
+    sums: dict[str, Column] | None = None,
+    maxes: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Per-key frame: ``key_col``, ``lsn_col`` (the key's max lsn), and
+    one column per caller-supplied counter — ``sums`` are summed and
+    ``maxes`` maxed over the key's events. Every aggregate buffer is a
+    primitive, so the plan is HashAggregate with a map-side partial
+    (module doc #1).
+
+    ``salt_buckets > 1``: explicit two-phase reduce — partial per
+    (key, pmod(xxhash64(lsn), S)), spreading one hot key over S
+    reducers, then a final per-key merge that sums the sum counters and
+    maxes the max counters over at most S rows per key."""
+    sums, maxes = sums or {}, maxes or {}
+    aggs = (
+        [F.max(lsn_col).alias(lsn_col)]
+        + [F.sum(e).alias(n) for n, e in sums.items()]
+        + [F.max(e).alias(n) for n, e in maxes.items()]
+    )
+    if not (salt_buckets and salt_buckets > 1):
+        return log.groupBy(key_col).agg(*aggs)
+    salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets)).alias("_salt")
+    return (
+        log.groupBy(F.col(key_col), salt)
+        .agg(*aggs)
+        .groupBy(key_col)
+        .agg(
+            F.max(lsn_col).alias(lsn_col),
+            *[F.sum(n).alias(n) for n in sums],
+            *[F.max(n).alias(n) for n in maxes],
+        )
+    )
+
+
+def lww_candidates(
+    log: DataFrame, reduced: DataFrame, key_col: str = "doc_id", lsn_col: str = "lsn"
+) -> DataFrame:
+    """The rows of ``log`` that carry their key's max lsn: a left-semi
+    join on (key, max lsn) against an ``lww_reduce`` frame. One row per
+    key, except replayed epochs, which repeat the winner byte-identically.
+    Broadcast under the session's raised threshold (the pair side is
+    ~30 B/key); past it the SHUFFLE_HASH hint keeps the fallback a hash
+    join — sort-merge would re-sort the full payload."""
+    pairs = reduced.select(key_col, lsn_col).hint("shuffle_hash")
+    return log.join(pairs, [key_col, lsn_col], "leftsemi")
 
 
 def lww_winners(
@@ -63,23 +115,8 @@ def lww_winners(
     copy winning is correct. Output schema == input schema.
     """
     cols = log.columns
-    if salt_buckets and salt_buckets > 1:
-        # phase 1: partial max per (key, salt) — spreads one hot key
-        # over `salt_buckets` reducers; phase 2: final max per key over
-        # at most `salt_buckets` rows/key.
-        salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets)).alias("_salt")
-        partial = log.groupBy(F.col(key_col), salt).agg(F.max(lsn_col).alias("_max_lsn"))
-        win = partial.groupBy(key_col).agg(F.max("_max_lsn").alias("_max_lsn"))
-    else:
-        win = log.groupBy(key_col).agg(F.max(lsn_col).alias("_max_lsn"))
-    # broadcast under the session's raised threshold (the pair side is
-    # ~30 B/key); past it the SHUFFLE_HASH hint keeps the fallback a
-    # hash join — sort-merge would re-sort the full payload.
-    cand = log.alias("_l").join(
-        win.hint("shuffle_hash").alias("_w"),
-        (F.col(f"_l.{key_col}") == F.col(f"_w.{key_col}"))
-        & (F.col(f"_l.{lsn_col}") == F.col("_w._max_lsn")),
-        "leftsemi",
+    cand = lww_candidates(
+        log, lww_reduce(log, key_col, lsn_col, salt_buckets), key_col, lsn_col
     )
     # replayed epochs duplicate the winning row byte-identically; this
     # final reduce runs on winner-sized data (>=1 dup rows per key) and

@@ -16,6 +16,20 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of the
+    host's MemTotal, capped at 48g. In local mode the driver JVM runs
+    every executor task, so a fixed heap larger than the machine gets
+    the JVM OOM-killed mid-job instead of spilling."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{max(1024, min(cap_mb, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "etl_gmaps_spark",
     cpus: int | None = None,
@@ -135,7 +149,10 @@ def get_spark(
             str(int(os.environ.get("SPARK_GRAFT_BROADCAST_MB", "64")) * 1024 * 1024),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Scan granularity: size file-split ranges so every level in
         # the 2..32-thread sweep gets multiple EVEN waves per epoch

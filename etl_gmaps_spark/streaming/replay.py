@@ -30,10 +30,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from time import monotonic
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable, bucket_expr
+from etl_gmaps_spark.operators.lww import lww_candidates, lww_reduce
+from etl_gmaps_spark.tableio.snapshot_table import CommitResult, SnapshotTable, bucket_expr
 
 ENVELOPE_COLS = ("lsn", "epoch", "ts")
 
@@ -66,11 +67,11 @@ class ReplayMetrics:
     events_stale_dropped: int = 0
     elapsed_sec: float = 0.0
     per_epoch: list[dict] = field(default_factory=list)
-    # REPLAY_PROFILE=1 only: wall-seconds summed over all commits, split
-    # into cluster jobs (stats_collect, write_buckets) and driver-serial
-    # work (post_write footer/ckpt, snapshot_commit JSON) — everything
-    # else (plan/optimize, python glue, epoch listing) lands in
-    # driver_other at report time. The Amdahl evidence for the N->4N
+    # wall-seconds per commit phase, summed over all commits: cluster
+    # jobs (stats_collect, write_buckets), driver-serial work
+    # (post_write footer/ckpt, snapshot_commit JSON) and batch_other
+    # (apply_batch glue around them). Epoch listing and plan time land
+    # in driver_other at report time. The Amdahl evidence for the N->4N
     # scaling claim: the serial share bounds achievable efficiency.
     prof: dict = field(default_factory=dict)
 
@@ -214,8 +215,6 @@ class Replayer:
             self._horizon = int(getattr(self.table, "gc_horizon", lambda: 0)() or 0)
         horizon = self._horizon
         if horizon:
-            from pyspark.sql import Observation
-
             pre_batch = batch
             stale_obs = Observation()
             batch = batch.observe(
@@ -243,8 +242,6 @@ class Replayer:
         # dedup'd counters are recomputed on that rare path below.
         cols = batch.columns
         ev_bytes = F.coalesce(F.col("n_tok") * 4, F.lit(0)) + F.length(self.key_col) + 16
-        from pyspark.sql import Observation
-
         dup_obs = Observation()
         observed = batch.observe(
             dup_obs,
@@ -255,44 +252,16 @@ class Replayer:
             # k≈5. 0.5% keeps a 6-sigma no-false-trip floor up to k≈30.
             F.approx_count_distinct(self.lsn_col, rsd=0.005).alias("approx_rows"),
         )
-        counters = [
-            F.count(F.lit(1)).alias("_cnt"),
-            F.max(self.lsn_col).alias("last_lsn"),
-            F.sum(ev_bytes).alias("_bytes"),
-            F.max("ts").alias("updated_at"),
-        ]
-        if self.salt_buckets and self.salt_buckets > 1:
-            # explicit two-phase reduce for pathological hot keys: the
-            # salt comes from the LSN, so one key's events spread over
-            # salt_buckets reducers before the final per-key merge.
-            salt = F.pmod(F.xxhash64(F.col(self.lsn_col)), F.lit(self.salt_buckets))
-            keyed = (
-                observed.groupBy(self.key_col, salt.alias("_salt"))
-                .agg(*counters)
-                .groupBy(self.key_col)
-                .agg(
-                    F.sum("_cnt").alias("_cnt"),
-                    F.max("last_lsn").alias("last_lsn"),
-                    F.sum("_bytes").alias("_bytes"),
-                    F.max("updated_at").alias("updated_at"),
-                )
-            )
-        else:
-            keyed = observed.groupBy(self.key_col).agg(*counters)
-        keyed = keyed.persist()
+        keyed = lww_reduce(
+            observed,
+            self.key_col,
+            self.lsn_col,
+            self.salt_buckets,
+            sums={"_cnt": F.lit(1), "_bytes": ev_bytes},
+            maxes={"updated_at": F.col("ts")},
+        ).persist()
         payload_cols = [c for c in cols if c not in ENVELOPE_COLS and c != self.op_col]
-        win = keyed.select(F.col(self.key_col).alias("_w_key"), "last_lsn")
-        # join strategy ladder: broadcast while the winner-key set fits
-        # the (raised) threshold — the payload never shuffles; beyond
-        # that the SHUFFLE_HASH hint keeps the fallback a hash join —
-        # sort-merge would re-sort the full payload, the exact cost the
-        # two-phase reduce exists to avoid.
-        cand = batch.alias("_b").join(
-            win.hint("shuffle_hash").alias("_w"),
-            (F.col(f"_b.{self.key_col}") == F.col("_w._w_key"))
-            & (F.col(f"_b.{self.lsn_col}") == F.col("_w.last_lsn")),
-            "leftsemi",
-        )
+        cand = lww_candidates(batch, keyed, self.key_col, self.lsn_col)
         # cand has unique keys already — only the winner (key, lsn) row
         # of each key survives the semi-join; the sole exception is
         # replayed delivery, where the SAME winner row appears as
@@ -312,33 +281,25 @@ class Replayer:
         # tlmt + exiter.IncrPlacesCompleted analog).
         obs = None
         if live_metrics:
-            from pyspark.sql import Observation
-
             obs = Observation()
             src = src.observe(
                 obs,
                 F.count(F.lit(1)).alias("winners"),
                 F.sum((F.col(self.op_col) == "D").cast("long")).alias("deletes"),
             )
-        import os as _os
-
-        _prof = _os.environ.get("REPLAY_PROFILE") == "1"
-        _t0_batch = monotonic()
-        _t = _t0_batch
+        t0 = monotonic()
         stats_rows = [
             r.asDict()
             for r in keyed.groupBy(bucket_expr(self.key_col, n_buckets).alias("_p"))
             .agg(
                 F.sum("_cnt").alias("_raw_rows"),
-                F.max("last_lsn").alias("last_lsn"),
+                F.max(self.lsn_col).alias("last_lsn"),
                 F.sum("_bytes").alias("_raw_bytes"),
                 F.max("updated_at").alias("updated_at"),
             )
             .collect()
         ]
-        _stats_sec = monotonic() - _t
-        if _prof:
-            print(f"[prof] epoch={epochs[-1]} stats_collect={_stats_sec:.2f}s", flush=True)
+        stats_sec = monotonic() - t0
         # dup detection: a replayed epoch among the k epochs of this
         # slice adds ~raw/(k+1) rows, so the trip level scales with k
         # instead of the fixed 10% that a >=10-epoch group dilutes past
@@ -408,7 +369,6 @@ class Replayer:
         events = sum(r["rows_applied"] for r in stats)
         ckpt = self._merged_checkpoint_rows(stats)
 
-        _t = monotonic()
         res = self.table.merge(
             src,
             epoch=epochs,
@@ -419,8 +379,6 @@ class Replayer:
             touched_buckets=[s["partition"] for s in stats],
             dedupe_source=True,
         )
-        if _prof:
-            print(f"[prof] epoch={epochs[-1]} merge={monotonic() - _t:.2f}s", flush=True)
         compacted = 0
         if (
             self.auto_compact
@@ -431,23 +389,15 @@ class Replayer:
                 self.compact_max_chain, self.compact_max_delta_ratio
             )
             compacted = c.buckets_rewritten if c is not None else 0
-            if _prof and compacted:
-                print(
-                    f"[prof] epoch={epochs[-1]} auto-compacted {compacted} buckets",
-                    flush=True,
-                )
         keyed.unpersist()
-        prof = None
-        if _prof:
-            prof = dict(res.prof or {})
-            prof["stats_collect"] = _stats_sec
-            # driver glue between/around the two cluster actions: dup
-            # check, exact-dedupe rare path, checkpoint merge, plan time
-            prof["batch_other"] = max(
-                0.0, (monotonic() - _t0_batch) - _stats_sec - sum(
-                    (res.prof or {}).values()
-                )
-            )
+        prof = dict(res.prof or {})
+        prof["stats_collect"] = stats_sec
+        # driver glue between/around the two cluster actions: dup check,
+        # exact-dedupe rare path, checkpoint merge, plan time, and any
+        # auto-compaction
+        prof["batch_other"] = max(
+            0.0, (monotonic() - t0) - stats_sec - sum((res.prof or {}).values())
+        )
         # available as soon as the merge action finished (same job);
         # same zero-rows metrics quirk as above — an all-stale batch
         # (empty stats) merges an empty winner set, whose observation
@@ -551,9 +501,8 @@ class Replayer:
                 ):
                     self._maybe_gc_tombstones()
             m.per_epoch.append(info)
-            if info.get("prof"):
-                for k, val in info["prof"].items():
-                    m.prof[k] = m.prof.get(k, 0.0) + val
+            for k, val in (info.get("prof") or {}).items():
+                m.prof[k] = m.prof.get(k, 0.0) + val
             if fail_after_epochs is not None and m.epochs_applied >= fail_after_epochs:
                 m.elapsed_sec = monotonic() - t0
                 raise InjectedCrash(f"injected crash after {m.epochs_applied} epochs")

@@ -289,7 +289,7 @@ class IcebergTable:
 
     def _epoch_ledger(
         self,
-    ) -> tuple[list[tuple[int, int]], dict[int, tuple[int, int]], bool]:
+    ) -> tuple[list[tuple[int, int]], dict[int, tuple[int, int]]]:
         """(ranges, {epoch: (snapshot_id, events)}) from the
         `cdc.epoch.*` table properties merge() stamps. SHOW
         TBLPROPERTIES is metadata-only (no data scan) and — unlike
@@ -299,10 +299,8 @@ class IcebergTable:
         numbering — zero-based, 1-based, mid-binlog, or the streaming
         namespace) and unsets the covered per-epoch keys, so metadata
         stays O(fragmentation) no matter how many epochs applied
-        (EpochSet parity). Legacy `cdc.epoch.base`/`.watermark` pairs
-        from the earlier two-stamp protocol read back as one range."""
+        (EpochSet parity)."""
         ranges: list[tuple[int, int]] = []
-        legacy_base = legacy_watermark = 0
         out: dict[int, tuple[int, int]] = {}
         for k, v in self._properties().items():
             if k.startswith("cdc.epoch."):
@@ -313,25 +311,9 @@ class IcebergTable:
                         for b, _, w in (p.partition(":") for p in v.split(",") if p)
                     ]
                     continue
-                if suffix == "watermark":
-                    legacy_watermark = int(v)
-                    continue
-                if suffix == "base":
-                    legacy_base = int(v)
-                    continue
                 snap_s, _, ev_s = v.partition(":")
                 out[int(suffix)] = (int(snap_s), int(ev_s or 0))
-        legacy = legacy_watermark > legacy_base
-        if legacy:
-            # append, don't shadow: a table may carry both a legacy pair
-            # (pre-ranges commits) and the ranges property (post).
-            # Consumers normalize (EpochSet, rollup_epochs) or only
-            # test membership, so an unnormalized extra pair is safe —
-            # and a length-1 legacy range is never silently dropped.
-            # The flag lets merge() retire the legacy keys on its next
-            # rollup (their coverage folds into cdc.epoch.ranges).
-            ranges = ranges + [(legacy_base, legacy_watermark)]
-        return ranges, out, legacy
+        return ranges, out
 
     def gc_horizon(self) -> int:
         """Highest lsn below which arriving events must be dropped as
@@ -356,7 +338,7 @@ class IcebergTable:
             )
 
     def applied_epochs(self) -> EpochSet:
-        ranges, ledger, _ = self._epoch_ledger()
+        ranges, ledger = self._epoch_ledger()
         # keys inside a range are the retained attribution tail —
         # already covered; keeping them in `explicit` would
         # double-count len()/iter()
@@ -377,7 +359,7 @@ class IcebergTable:
         select (newest first, optional filters, LIMIT) answered from
         Iceberg's `.snapshots` metadata table joined with the
         `cdc.epoch.*` property ledger."""
-        _, ledger, _ = self._epoch_ledger()
+        _, ledger = self._epoch_ledger()
         # one snapshot can carry several epochs (millisecond commit
         # ties are attributed via .refs, but a caller may also batch),
         # so the inversion is snapshot -> LIST — a dict comprehension
@@ -451,7 +433,7 @@ class IcebergTable:
             else [int(epoch)] if isinstance(epoch, int)
             else [int(e) for e in epoch]
         )
-        ranges, ledger, legacy_present = self._epoch_ledger()
+        ranges, ledger = self._epoch_ledger()
 
         def _applied(e: int) -> bool:
             return any(b <= e < w for b, w in ranges) or e in ledger
@@ -520,34 +502,12 @@ class IcebergTable:
             # per-epoch ledger stays O(fragmentation), not O(epochs):
             # without this, 10^5 epochs = 10^5 table properties and
             # every merge's applied-check scans all of them
-            new_ranges, still_sparse = rollup_epochs(
-                ranges, set(ledger) | set(epochs)
-            )
-            # a length-1 legacy range normalizes to a SPARSE member; if
-            # no per-epoch key exists for it (it predates the ranges
-            # protocol), re-stamp one before the legacy pair is retired
-            # below, or its membership would be lost
-            for e in still_sparse:
-                if e not in ledger and e not in epochs:
-                    self.spark.sql(epoch_property_sql(self.identifier, e, 0, 0))
-            # compare against the NORMALIZED current ranges: the raw
-            # list may carry the appended legacy pair, which would read
-            # as a difference forever and restamp on every merge
-            cur_ranges, _ = rollup_epochs(ranges, set())
-            if new_ranges != cur_ranges or legacy_present:
+            new_ranges, _ = rollup_epochs(ranges, set(ledger) | set(epochs))
+            if new_ranges != ranges:
                 # ONE atomic stamp; a crash before the unsets below
                 # leaves covered keys standing — membership unchanged
                 # (range ∪ keys), swept by the next merge
                 self.spark.sql(ranges_property_sql(self.identifier, new_ranges))
-            if legacy_present:
-                # retire the pre-ranges two-stamp pair: its coverage
-                # just folded into cdc.epoch.ranges (stamped above
-                # unconditionally when legacy was present), so the keys
-                # would otherwise linger forever
-                self.spark.sql(
-                    f"ALTER TABLE {self.identifier} UNSET TBLPROPERTIES "
-                    "('cdc.epoch.base', 'cdc.epoch.watermark')"
-                )
             # unset range-covered keys EXCEPT a recent window per range
             # (their membership is already covered; keeping each
             # range's newest tail preserves commit_log's

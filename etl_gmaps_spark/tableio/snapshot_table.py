@@ -63,8 +63,8 @@ Scale design:
     folded into a single consolidated manifest. The commit ledger
     keeps full rows for the newest ``ledger_keep`` commits and rolls
     older rows into an aggregate summary; the applied-epoch set is
-    stored as a contiguous watermark + sparse explicit list, so a
-    10^7-epoch replay stores one integer, not 10^7.
+    stored as half-open ranges + a sparse explicit list (EpochSet), so
+    a 10^7-epoch replay stores one integer pair, not 10^7.
   * commit = data files first, then manifest, then snapshot json
     (O_EXCL — two racing writers cannot both create v{N}.json), then
     pointer rename (atomic on POSIX). A crash before the pointer flip
@@ -72,7 +72,7 @@ Scale design:
     unreferenced files — the replay driver re-applies the epoch
     idempotently, and the failure is recorded in the lineage sidecar.
   * snapshot ``properties`` carry the commit-epoch ledger
-    (``epochs`` watermark+list and per-commit stats), mirroring the
+    (``epoch_ranges``/``epochs`` and per-commit stats), mirroring the
     reference's idempotent sink (ON CONFLICT DO NOTHING,
     postgres/resultwriter.go:83) as Iceberg snapshot-summary metadata.
 """
@@ -83,6 +83,7 @@ import json
 import os
 import uuid
 from dataclasses import dataclass
+from time import monotonic
 from typing import Any, Iterator
 
 import pyarrow as pa
@@ -149,11 +150,11 @@ class CommitResult:
     # events ≈ bytes_rewritten / (E × avg_row_bytes); surfaced per-commit
     # in the ledger (commit_info) and aggregated by bench.py.
     bytes_rewritten: int = 0
-    # REPLAY_PROFILE=1 only: wall-seconds per commit phase —
-    # write_buckets (cluster job), post_write (driver serial: parquet
-    # footer stats + checkpoint + ledger rollup), snapshot_commit
-    # (driver serial: metadata JSON write). Feeds the Amdahl
-    # decomposition in BENCH/BASELINE.md.
+    # merge() only: wall-seconds per commit phase — write_buckets
+    # (cluster job), post_write (driver serial: parquet footer stats +
+    # checkpoint + ledger rollup), snapshot_commit (driver serial:
+    # metadata JSON write). Feeds the Amdahl decomposition in
+    # BENCH/BASELINE.md.
     prof: dict | None = None
 
 
@@ -212,44 +213,37 @@ class EpochSet:
 
     def __init__(
         self,
-        watermark: int = 0,
-        explicit: set[int] | None = None,
-        base: int = 0,
+        *,
         ranges: list[tuple[int, int]] | None = None,
+        explicit: set[int] | None = None,
     ):
-        if ranges is None:
-            ranges = [(int(base), int(watermark))] if int(watermark) > int(base) else []
         self.ranges, self.explicit = _normalize_epochs(
-            ranges, {int(e) for e in (explicit or ())}
+            ranges or [], {int(e) for e in (explicit or ())}
         )
-
-    # base/watermark view the LOWEST range — the common single-range
-    # case reads exactly like the old two-integer encoding
-    @property
-    def base(self) -> int:
-        return self.ranges[0][0] if self.ranges else 0
-
-    @property
-    def watermark(self) -> int:
-        return self.ranges[0][1] if self.ranges else 0
 
     def contiguous_in_band(
         self, bound: int = OUT_OF_BAND_EPOCH_BASE, above: int = -1
     ) -> bool:
-        """True when the IN-BAND applied epochs (< ``bound``) ABOVE
-        ``above`` form one contiguous run with no sparse stragglers —
-        the shape the tombstone-GC low-water-mark safety argument
-        needs. Out-of-band ledger keys (the streaming namespace) are
-        ignored: the gap between namespaces is vacuous, not an
-        un-applied segment. ``above`` is the table's gc_horizon_epoch:
-        every epoch at or below it is entirely below the persisted GC
-        horizon, so its events can never reach row-level apply (the
-        horizon filter drops them) — fragmentation down there (e.g. a
-        consumed-but-fully-stale segment) is equally vacuous."""
-        return (
-            len([r for r in self.ranges if r[0] < bound and r[1] > above + 1]) <= 1
-            and not any(above < e < bound for e in self.explicit)
+        """True when every gap between IN-BAND applied epochs (< ``bound``)
+        lies at or below ``above`` — no un-applied epoch ``e`` with
+        ``above < e`` sits between the lowest and the highest applied
+        in-band epoch. That is the shape the tombstone-GC low-water-mark
+        safety argument needs; where the run starts does not matter (a
+        stream numbered from 100 is contiguous). Out-of-band ledger keys
+        (the streaming namespace) are ignored: the gap between
+        namespaces is vacuous, not an un-applied segment. ``above`` is
+        the table's gc_horizon_epoch: every epoch at or below it is
+        entirely below the persisted GC horizon, so its events can never
+        reach row-level apply (the horizon filter drops them) — a gap
+        down there (e.g. a consumed-but-fully-stale segment) is equally
+        vacuous."""
+        # normalized runs are disjoint and non-adjacent, so every run
+        # after the lowest is preceded by a gap ending at its start - 1
+        starts = sorted(
+            [b for b, _ in self.ranges if b < bound]
+            + [e for e in self.explicit if e < bound]
         )
+        return all(b <= above + 1 for b in starts[1:])
 
     def __contains__(self, e) -> bool:
         e = int(e)
@@ -272,17 +266,9 @@ class EpochSet:
 
 
 def _epoch_set(props: dict[str, Any]) -> EpochSet:
-    if "epoch_ranges" in props:
-        return EpochSet(
-            ranges=[(int(b), int(w)) for b, w in props["epoch_ranges"]],
-            explicit=props.get("epochs", []),
-        )
-    # legacy layouts: (base, watermark, sparse) from round 5 interim,
-    # or the round-4 zero-anchored watermark — identical semantics
     return EpochSet(
-        props.get("epochs_watermark", 0),
-        props.get("epochs", []),
-        props.get("epochs_base", 0),
+        ranges=[(int(b), int(w)) for b, w in props.get("epoch_ranges", [])],
+        explicit=props.get("epochs", []),
     )
 
 
@@ -295,10 +281,6 @@ def _store_epochs(props: dict[str, Any], es: EpochSet) -> None:
     ranges, sparse = _normalize_epochs(es.ranges, es.explicit)
     props["epoch_ranges"] = [[b, w] for b, w in ranges]
     props["epochs"] = sorted(sparse)
-    # superseded legacy keys: a stale base/watermark pair alongside
-    # epoch_ranges would shadow-claim epochs on old readers
-    props.pop("epochs_base", None)
-    props.pop("epochs_watermark", None)
 
 
 def _entry(base: list[str], deltas: list[str] | None = None,
@@ -307,8 +289,7 @@ def _entry(base: list[str], deltas: list[str] | None = None,
     maintenance_plan's delta-ratio check reads manifest metadata instead
     of os.stat'ing every file — at 10^5 buckets × chain 8 the plan runs
     after every MoR commit and 800k stat calls per commit would dwarf
-    the commit itself. Entries from pre-size manifests lack the keys;
-    readers fall back to os.stat for those (migrated on next rewrite)."""
+    the commit itself."""
     deltas = deltas or []
     return {
         "base": list(base),
@@ -468,30 +449,18 @@ class SnapshotTable:
 
     def _resolve(self, snap: dict[str, Any]) -> dict[str, dict]:
         """bucket -> {"base": [...], "deltas": [...]}; newest manifest
-        entry for a bucket wins (each entry is self-contained)."""
-        if "manifests" not in snap:
-            # pre-manifest layout: v{N}.json carried the full bucket ->
-            # files map inline. Migrate on read (base only, no deltas —
-            # MoR postdates manifests) instead of silently resolving an
-            # old table as EMPTY, which would let the next merge commit
-            # a snapshot that drops every pre-existing row.
-            if "files" in snap:
-                return {
-                    b: {"base": list(fl), "deltas": []}
-                    for b, fl in snap["files"].items()
-                }
-            raise ValueError(
-                f"snapshot v{snap.get('version')} has neither 'manifests' "
-                "nor legacy 'files' — refusing to resolve it as empty"
-            )
+        entry for a bucket wins (each entry is self-contained). A
+        snapshot without a manifest list raises KeyError: resolving it
+        as empty would let the next merge commit a table missing every
+        row."""
         out: dict[str, dict] = {}
-        for path in snap.get("manifests", []):
+        for path in snap["manifests"]:
             out.update(self._load_manifest(path))
         return out
 
     def files_map(self, version: int | None = None) -> dict[str, list[str]]:
         """bucket -> every live data file (base + deltas). The public
-        replacement for the pre-manifest ``snapshot()["files"]``."""
+        view of the manifest list."""
         return {
             b: list(e.get("base", [])) + list(e.get("deltas", []))
             for b, e in self._resolve(self.snapshot(version)).items()
@@ -632,9 +601,7 @@ class SnapshotTable:
         seq = F.regexp_extract(
             F.input_file_name(), r"/s(\d+)(?:-[0-9a-f]{8})?/_bucket=", 1
         ).cast("long")
-        delta_bytes = sum(
-            os.path.getsize(f) for f in deltas if os.path.exists(f)
-        )
+        delta_bytes = sum(s for e in sel.values() for s in e.get("delta_sizes", []))
         if delta_bytes <= MOR_BROADCAST_RECONCILE_BYTES:
             # Small-delta fast path (the common shape between compactions
             # at 10^10 scale: batch ≪ table). The delta key set broadcasts;
@@ -777,16 +744,7 @@ class SnapshotTable:
         """Append one manifest for the touched buckets; consolidate the
         list when it exceeds MANIFEST_COMPACT_AT (Iceberg
         rewrite_manifests analog) so resolution stays O(1) files."""
-        if "manifests" not in snap:
-            # legacy inline-'files' snapshot: _resolve() migrates it for
-            # READS, but seeding the manifest list empty here would make
-            # this commit's snapshot reference ONLY the touched buckets —
-            # silently dropping every untouched bucket. Materialize the
-            # migrated map as a manifest first so the parent's full state
-            # survives the first post-upgrade merge/compact.
-            manifests = [self._write_manifest(version, self._resolve(snap))]
-        else:
-            manifests = list(snap.get("manifests", []))
+        manifests = list(snap["manifests"])
         if touched_entries:
             manifests.append(self._write_manifest(version, touched_entries))
         if len(manifests) > MANIFEST_COMPACT_AT:
@@ -816,7 +774,6 @@ class SnapshotTable:
             # would leave merges failing even after a full rewrite)
             bucket_hash=BUCKET_HASH,
         )
-        new.pop("files", None)  # legacy inline map, superseded by manifests
         if properties_update:
             props = dict(snap["properties"])
             props.update(properties_update)
@@ -924,7 +881,6 @@ class SnapshotTable:
             manifests=self._next_manifests(snap, v, entries),
             properties=props,
         )
-        new.pop("files", None)  # legacy inline map, superseded by manifests
         self._commit_snapshot(new)
         return CommitResult(v, v, rows_written, len(todo), None, bytes_rewritten)
 
@@ -992,8 +948,7 @@ class SnapshotTable:
         sizes at write time (``base_sizes``/``delta_sizes``, see
         ``_entry``), so the plan is a pure manifest walk with NO stat
         calls and no Spark job, cheap enough after every commit even at
-        10^5 buckets (the r4 watch item). Pre-size manifest entries fall
-        back to os.stat and are migrated on their next rewrite.
+        10^5 buckets (the r4 watch item).
 
         Tombstone GC leg (VERDICT r4 #3) — opt-in via BOTH
         ``tombstone_ratio`` and ``tombstone_before``: also plan any
@@ -1018,14 +973,7 @@ class SnapshotTable:
                 continue
             if max_delta_ratio is None:
                 continue
-
-            def _bytes(files: list[str], sizes: list[int] | None) -> int:
-                if sizes is not None and len(sizes) == len(files):
-                    return sum(sizes)
-                return sum(os.path.getsize(f) for f in files if os.path.exists(f))
-
-            dbytes = _bytes(deltas, e.get("delta_sizes"))
-            bbytes = _bytes(e.get("base", []), e.get("base_sizes"))
+            dbytes, bbytes = sum(e["delta_sizes"]), sum(e["base_sizes"])
             if dbytes >= max_delta_ratio * max(1, bbytes):
                 todo.add(int(b))
         if tombstone_ratio is not None and tombstone_before is not None:
@@ -1063,7 +1011,7 @@ class SnapshotTable:
         the plan also triggers on per-bucket GC-eligible tombstone mass
         and the rewrite drops those guard rows — delete-heavy streams
         stay bounded instead of accumulating dead rows until an
-        operator remembers compact_tombstones()."""
+        operator remembers to run compact(tombstones_before=...)."""
         todo = self.maintenance_plan(
             max_chain, max_delta_ratio, tombstone_ratio, tombstone_before
         )
@@ -1120,12 +1068,12 @@ class SnapshotTable:
             snap = self.snapshot(v)
             files = self._all_files(snap)
             referenced_any.update(files)
-            referenced_any.update(snap.get("manifests", []))
+            referenced_any.update(snap["manifests"])
             if snap.get("checkpoint_file"):
                 referenced_any.add(snap["checkpoint_file"])
             if v in keep:
                 live_files.update(files)
-                live_manifests.update(snap.get("manifests", []))
+                live_manifests.update(snap["manifests"])
                 if snap.get("checkpoint_file"):
                     live_ckpts.add(snap["checkpoint_file"])
 
@@ -1188,22 +1136,6 @@ class SnapshotTable:
             if f.startswith("ckpt-") and p not in live_ckpts and not _orphan_guarded(p):
                 shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
         return {"removed_files": removed_files, "removed_snapshots": removed_snaps, "kept": sorted(keep)}
-
-    def compact_tombstones(self, before_lsn: int) -> CommitResult:
-        """Manual whole-table tombstone GC: physically drop deleted rows
-        whose _lsn is below ``before_lsn`` (the replay low-water mark) —
-        no event at a lower lsn can ever arrive again, so the guard rows
-        are dead weight. Rewrites every bucket. The automatic, per-bucket
-        form is maintain(tombstone_ratio=..., tombstone_before=...),
-        which the Replayer drives on a gc_every cadence; keep this one
-        for one-shot operator runs."""
-        snap = self.snapshot()
-        full = self._reconciled(snap)
-        kept = full.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            | (F.col(LSN_COL) >= F.lit(before_lsn))
-        )
-        return self.overwrite(kept)
 
     def evolve_schema(self, new_fields: list[T.StructField]) -> T.StructType:
         """Additive-only schema evolution (mirrors reference migrations
@@ -1328,10 +1260,7 @@ class SnapshotTable:
             src = src.drop(lsn_col)
         src = src.drop(op_col)
 
-        import time as _time
-
-        _prof = os.environ.get("REPLAY_PROFILE") == "1"
-        _t = _time.monotonic()
+        t0 = monotonic()
         v = snap["version"] + 1
 
         if mode == "mor":
@@ -1372,22 +1301,12 @@ class SnapshotTable:
             entries = {}
             for b in touched:
                 prev = resolved.get(str(b), {})
-                prev_d = list(prev.get("deltas", []))
                 new_d = new_files.get(str(b), [])
-                prev_b = list(prev.get("base", []))
-                # carry prior sizes when the prior entry has them
-                # (pre-size manifests: stat once here, cached thereafter)
-                prev_bs = prev.get("base_sizes")
-                if prev_bs is None or len(prev_bs) != len(prev_b):
-                    prev_bs = [os.path.getsize(f) for f in prev_b]
-                prev_ds = prev.get("delta_sizes")
-                if prev_ds is None or len(prev_ds) != len(prev_d):
-                    prev_ds = [os.path.getsize(f) for f in prev_d]
                 entries[str(b)] = {
-                    "base": prev_b,
-                    "deltas": prev_d + new_d,
-                    "base_sizes": list(prev_bs),
-                    "delta_sizes": list(prev_ds)
+                    "base": list(prev.get("base", [])),
+                    "deltas": list(prev.get("deltas", [])) + new_d,
+                    "base_sizes": list(prev.get("base_sizes", [])),
+                    "delta_sizes": list(prev.get("delta_sizes", []))
                     + [os.path.getsize(f) for f in new_d],
                 }
         else:
@@ -1445,12 +1364,8 @@ class SnapshotTable:
             # a CoW commit replaces each touched bucket's full state
             entries = {str(b): _entry(new_files.get(str(b), [])) for b in touched}
 
-        _prof_d: dict | None = None
-        if _prof:
-            _prof_d = {"write_buckets": _time.monotonic() - _t}
-            print(f"[prof]   write_buckets={_prof_d['write_buckets']:.2f}s", flush=True)
-            _t = _time.monotonic()
-
+        prof = {"write_buckets": monotonic() - t0}
+        t0 = monotonic()
         rows_written, bytes_rewritten = _footer_stats(
             [f for fl in new_files.values() for f in fl]
         )
@@ -1495,16 +1410,13 @@ class SnapshotTable:
             "properties": props,
             "checkpoint_file": ckpt_file,
         }
-        if _prof_d is not None:
-            _prof_d["post_write"] = _time.monotonic() - _t
-            print(f"[prof]   post_write(footers+ckpt)={_prof_d['post_write']:.2f}s", flush=True)
-            _t = _time.monotonic()
+        prof["post_write"] = monotonic() - t0
+        t0 = monotonic()
         self._commit_snapshot(new)
-        if _prof_d is not None:
-            _prof_d["snapshot_commit"] = _time.monotonic() - _t
+        prof["snapshot_commit"] = monotonic() - t0
         return CommitResult(
             v, v, rows_written, len(touched), epochs[-1] if epochs else None,
-            bytes_rewritten, _prof_d,
+            bytes_rewritten, prof,
         )
 
 

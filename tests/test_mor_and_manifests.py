@@ -108,17 +108,6 @@ def test_maintenance_plan_uses_manifest_sizes(spark, tmp_path, monkeypatch):
     assert table.maintenance_plan(max_chain=2) == want
     monkeypatch.undo()
 
-    # legacy manifests (pre-size entries) still work via the stat path
-    m_path = table.snapshot()["manifests"][-1]
-    m = json.load(open(m_path))
-    for e in m["buckets"].values():
-        e.pop("base_sizes", None)
-        e.pop("delta_sizes", None)
-    with open(m_path, "w") as fh:
-        json.dump(m, fh)
-    table._manifest_cache.clear()
-    assert table.maintenance_plan(max_chain=2) == want
-
 
 def test_mor_compact_folds_deltas(spark, tmp_path):
     base = gen_base(spark, n_docs=200, seed=3)
@@ -418,21 +407,15 @@ def test_mor_rejects_null_lsn_values(spark, tmp_path):
         table.merge(src, epoch=1)
 
 
-def test_resolve_migrates_legacy_files_layout(spark, tmp_path):
-    """A snapshot written by pre-manifest code (inline 'files' map, no
-    'manifests' key) must resolve to its real files — not silently as
-    an empty table, which would let the next merge drop every row."""
+def test_resolve_without_manifests_fails_loudly(spark, tmp_path):
+    """A snapshot with no manifest list must fail loudly, not resolve
+    as an empty table — the next merge would then commit a snapshot
+    missing every row."""
     base = gen_base(spark, n_docs=50, seed=41)
     table = make_table(spark, tmp_path, base)
     snap = dict(table.snapshot())
-    legacy_files = {b: list(fl) for b, fl in table.files_map().items()}
     snap.pop("manifests")
-    snap["files"] = legacy_files
-    entries = table._resolve(snap)
-    assert entries == {b: {"base": fl, "deltas": []} for b, fl in legacy_files.items()}
-    # and a snapshot with neither layout fails loudly
-    snap.pop("files")
-    with pytest.raises(ValueError, match="refusing"):
+    with pytest.raises(KeyError, match="manifests"):
         table._resolve(snap)
 
 
@@ -443,48 +426,6 @@ def _one_row_src(spark, doc_id="doc-00000001", tokens=(1,), lsn=10, epoch=0):
         "doc_id string, tokens array<int>, n_tok int, source string, "
         "op string, lsn long, epoch long, ts timestamp",
     )
-
-
-def test_merge_after_legacy_snapshot_keeps_untouched_buckets(spark, tmp_path):
-    """ADVICE r3 (high): the first merge on a pre-manifest snapshot must
-    materialize the migrated inline-'files' map as a manifest — not seed
-    the manifest list empty, which silently dropped every bucket the
-    commit didn't touch (1-key merge into 8 buckets left 1 bucket)."""
-    base = gen_base(spark, n_docs=200, seed=7)
-    table = make_table(spark, tmp_path, base, n_buckets=8)
-    n_before = table.read().count()
-    # rewrite v1.json in the legacy layout: inline 'files', no 'manifests'
-    snap = table.snapshot()
-    files = {b: fl for b, fl in table.files_map().items()}
-    snap.pop("manifests")
-    snap["files"] = files
-    with open(os.path.join(table.meta_dir, "v1.json"), "w") as fh:
-        json.dump(snap, fh)
-    table._manifest_cache.clear()
-    table.merge(_one_row_src(spark), epoch=1)
-    assert len(table.files_map()) == 8  # every bucket survived
-    assert table.read().count() == n_before  # upsert of an existing key
-    assert "files" not in table.snapshot()  # migrated to manifests
-
-
-def test_compact_after_legacy_snapshot_keeps_untouched_buckets(spark, tmp_path):
-    """Same legacy-migration guarantee on the compact() path (it shares
-    _next_manifests with merge). A legacy CoW table upgraded to MoR via
-    one delta merge then compacted must keep all buckets."""
-    base = gen_base(spark, n_docs=200, seed=17)
-    table = make_table(spark, tmp_path, base, n_buckets=8, merge_mode="mor")
-    n_before = table.read().count()
-    snap = table.snapshot()
-    files = {b: [f for f in e["base"]] for b, e in table._resolve(snap).items()}
-    snap.pop("manifests")
-    snap["files"] = files
-    with open(os.path.join(table.meta_dir, "v1.json"), "w") as fh:
-        json.dump(snap, fh)
-    table._manifest_cache.clear()
-    table.merge(_one_row_src(spark), epoch=1)  # writes one delta
-    table.compact()
-    assert len(table.files_map()) == 8
-    assert table.read().count() == n_before
 
 
 def test_losing_racer_cannot_clobber_winner_files(spark, tmp_path):

@@ -177,3 +177,39 @@ def test_merge_source_dedupe_adds_no_exchange(spark):
     plan = plan_of(df.repartition(8, F.col("_s_key")).dropDuplicates(["_s_key"]))
     assert plan.count("REPARTITION_BY_NUM") == 1
     assert "ENSURE_REQUIREMENTS" not in plan
+
+
+@pytest.mark.parametrize("salt_buckets", [0, 4])
+def test_replay_reduce_is_partial_hash_aggregate(spark, tmp_path, salt_buckets):
+    """Replayer.apply_batch's per-key reduce (operators/lww.py) must
+    partial-aggregate map-side as a HashAggregate — never SortAggregate
+    — and its winner semi-join must stay a hash join: a SortMergeJoin
+    would re-sort the full token payload. Salted, the second phase
+    merges the per-(key, salt) counters."""
+    from etl_gmaps_spark.datagen import gen_base, gen_changelog
+    from etl_gmaps_spark.schemas import TARGET_SCHEMA
+    from etl_gmaps_spark.streaming.replay import Replayer
+    from etl_gmaps_spark.tableio import SnapshotTable
+
+    base = gen_base(spark, n_docs=100, seed=3)
+    log = gen_changelog(spark, n_docs=100, n_events=1000, seed=3, epoch_size=500)
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "tbl"), TARGET_SCHEMA, n_buckets=4, base_df=base
+    )
+    plans = []
+    merge = table.merge
+
+    def capture(winners, **kw):
+        plans.append(plan_of(winners))
+        return merge(winners, **kw)
+
+    table.merge = capture
+    Replayer(table, salt_buckets=salt_buckets).apply_batch(
+        log.filter(F.col("epoch") == 0), epoch=0
+    )
+    (plan,) = plans
+    assert "HashAggregate" in plan and "partial_max(lsn" in plan
+    assert "SortAggregate" not in plan
+    assert "LeftSemi" in plan and "SortMergeJoin" not in plan
+    if salt_buckets:
+        assert "partial_sum(_cnt" in plan

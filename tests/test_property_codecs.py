@@ -1,9 +1,9 @@
 """Property tests for the pure codec/arithmetic kernels — no Spark.
 
 1. Iceberg epoch-ledger rollup: membership is invariant under rollup,
-   the watermark only advances, and dropped keys are exactly the ones
-   the watermark now covers.
-2. BMP/WAV decoders on corrupted payloads: every failure is the
+   and the output is the canonical range + sparse encoding.
+2. EpochSet.contiguous_in_band agrees with its brute-force definition.
+3. BMP/WAV decoders on corrupted payloads: every failure is the
    promised ValueError (task code must never leak ZeroDivisionError /
    struct.error / slice errors into a Spark executor), and successful
    decodes honor the header.
@@ -23,6 +23,7 @@ from etl_gmaps_spark.operators.multimodal import (
     _resize_pixels,
 )
 from etl_gmaps_spark.tableio.iceberg_table import rollup_epochs
+from etl_gmaps_spark.tableio.snapshot_table import EpochSet
 
 
 @given(
@@ -36,9 +37,8 @@ from etl_gmaps_spark.tableio.iceberg_table import rollup_epochs
     applied=st.sets(st.integers(min_value=0, max_value=100), max_size=40),
 )
 def test_rollup_epochs_invariants(ranges, applied):
-    # arbitrary (possibly overlapping/empty) input ranges — the reader
-    # may hand rollup an unnormalized list (legacy base/watermark pair
-    # appended to the ranges property)
+    # arbitrary (possibly overlapping/empty) input ranges: rollup must
+    # normalize whatever it is handed
     ranges = [(b, b + ln) for b, ln in ranges]
     new_ranges, sparse = rollup_epochs(ranges, applied)
 
@@ -61,6 +61,30 @@ def test_rollup_epochs_invariants(ranges, applied):
         assert w - b >= 2
     for e in sparse:
         assert not any(b - 1 <= e <= w for b, w in new_ranges)
+
+
+@given(
+    ranges=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=70),
+            st.integers(min_value=0, max_value=12),
+        ),
+        max_size=4,
+    ),
+    explicit=st.sets(st.integers(min_value=0, max_value=80), max_size=6),
+    above=st.integers(min_value=-1, max_value=70),
+)
+def test_contiguous_in_band_matches_brute_force(ranges, explicit, above):
+    # bound=60 puts part of the generated epochs out of band
+    bound = 60
+    es = EpochSet(ranges=[(b, b + ln) for b, ln in ranges], explicit=explicit)
+    applied = [e for e in range(bound) if e in es]
+    # no un-applied in-band epoch above `above` lies between the lowest
+    # and the highest applied in-band epoch
+    want = not applied or all(
+        e in es or e <= above for e in range(applied[0], applied[-1])
+    )
+    assert es.contiguous_in_band(bound=bound, above=above) == want
 
 
 _mutations = st.lists(

@@ -150,7 +150,10 @@ def test_tombstone_compaction(spark, tmp_path):
     )
     n_tombstones = full.filter(F.col("_deleted")).count()
     assert n_tombstones > 0  # deletes happened
-    table.compact_tombstones(before_lsn=10_000)
+    table.compact(tombstones_before=10_000)
+    # the GC horizon is persisted, so a late replay of an older segment
+    # is dropped as stale instead of resurrecting a collected delete
+    assert table.gc_horizon() == 10_000
     full2 = spark.read.option("mergeSchema", "true").parquet(
         *[f for fl in table.files_map().values() for f in fl]
     )
@@ -560,13 +563,19 @@ def test_epoch_set_ranges_compact_and_merge():
     _store_epochs(props, es5)
     assert props["epoch_ranges"][0] == [10, 5004] and props["epochs"] == []
     assert _epoch_set(props).contiguous_in_band()
-    # tables persisted under either legacy layout read back unchanged
-    legacy = {"epochs_watermark": 4, "epochs": [7]}
-    es6 = _epoch_set(legacy)
-    assert 0 in es6 and 3 in es6 and 7 in es6 and 5 not in es6
-    anchored = {"epochs_base": 100, "epochs_watermark": 104, "epochs": []}
-    es7 = _epoch_set(anchored)
-    assert 100 in es7 and 103 in es7 and 99 not in es7 and 104 not in es7
+
+
+def test_contiguous_in_band_sees_gap_after_horizon_range():
+    """Regression: the range ending at above+1 must not hide the
+    gap right after it. Epoch 11 is un-applied and above the horizon
+    epoch 10, so advancing the horizon past it would drop its events
+    as stale when the segment drains."""
+    from etl_gmaps_spark.tableio.snapshot_table import EpochSet
+
+    es = EpochSet(ranges=[(0, 11), (12, 14)])
+    assert not es.contiguous_in_band(above=10)
+    # once epoch 11 is at or below the horizon epoch the gap is vacuous
+    assert es.contiguous_in_band(above=11)
 
 
 def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
@@ -588,9 +597,7 @@ def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
     rep.run(log)
     assert_table_equal(table.read(), expected)
     es = table.applied_epochs()
-    assert es.base == 100 and es.watermark == 110 and not es.explicit, (
-        es.base, es.watermark, es.explicit,
-    )
+    assert es.ranges == [(100, 110)] and not es.explicit, (es.ranges, es.explicit)
     assert [c for c in table.commit_log() if "gc_tombstones_before" in c], (
         "non-zero-based epoch numbering disabled the GC cadence"
     )

@@ -161,7 +161,7 @@ def main() -> int:
     # pair wherever its numbering starts, keeping O(fragmentation +
     # recent window) properties (the KEEP_RECENT_EPOCHS attribution
     # tail), not one per epoch forever
-    ranges, _, _ = it._epoch_ledger()
+    ranges, _ = it._epoch_ledger()
     checks.append(("rollup compacts 1-based run to one range", ranges == [(1, 4)]))
     it.KEEP_RECENT_EPOCHS = 0  # force full rollup so the unset path runs
     it.merge(
@@ -171,7 +171,7 @@ def main() -> int:
         ),
         epoch=0,  # BELOW the range: a late replay of an older segment
     )
-    ranges, sparse, _ = it._epoch_ledger()
+    ranges, sparse = it._epoch_ledger()
     # the late below-range epoch applies AND, being adjacent, MERGES
     # into the range (r5 review: a drained gap must compact, not pin
     # one explicit property per late epoch forever)
